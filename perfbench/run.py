@@ -6,9 +6,12 @@
 
 Run from the root of a checkout. The first run builds the program and the
 benchmark's own Scala code (perfbench.Main) from the checkout's sources with
-sbt (the build is cached under .bench_build/, keyed by a hash of every source
-and build file); every run then starts one JVM on that classpath. The JVM's last stdout line, one
-JSON object, is printed last. The full named record of the run is written to
+sbt. Each build's class directories are copied into
+.bench_build/build-<hash>/, keyed by a hash of every source and build file,
+so a later run of the same sources uses the bytes built from them even after
+sbt has rebuilt the shared target/ directories for other sources. Every run
+then starts one JVM on that classpath. The JVM's last stdout line, one JSON
+object, is printed last. The full named record of the run is written to
 .bench_build/records/.
 
 --selftest runs every workload once on tiny inputs, untraced and traced, and
@@ -25,7 +28,7 @@ import signal
 import subprocess
 import sys
 
-HERE = os.path.dirname(os.path.abspath(__file__))
+HERE = os.path.dirname(os.path.realpath(__file__))
 ROOT = os.path.dirname(HERE)
 BUILD = os.path.join(ROOT, ".bench_build")
 WORKLOADS = ["jdbc_etl", "increment_stream"]
@@ -85,14 +88,18 @@ def run_group(cmd, timeout, **kw):
 
 def build():
     """Compiles the program and perfbench.Main once per source fingerprint;
-    returns the runtime classpath."""
+    returns the runtime classpath, with every entry built from the checkout
+    replaced by a copy kept under that fingerprint."""
     for rel in ("build.sbt", "src/main/scala/graft"):
         if not os.path.exists(os.path.join(ROOT, rel)):
             fail("program sources not found (%s); run from the root of a checkout" % rel)
-    cache = os.path.join(BUILD, "classpath-%s.txt" % fingerprint())
+    fp = fingerprint()
+    cache = os.path.join(BUILD, "classpath-%s.txt" % fp)
     if os.path.isfile(cache):
         with open(cache) as fh:
-            return fh.read().strip()
+            cp = fh.read().strip()
+        if all(os.path.exists(e) for e in cp.split(os.pathsep)):
+            return cp
     tmp = os.path.join(BUILD, "tmp")
     os.makedirs(tmp, exist_ok=True)
     # keep every JVM sbt starts from writing temp and perf files elsewhere
@@ -113,9 +120,32 @@ def build():
              if ".jar" in l and os.pathsep in l and not l.startswith("[")]
     if not lines:
         fail("build printed no classpath; see %s" % log, 1)
-    cp = lines[-1].strip()
-    with open(cache, "w") as fh:
+    # sbt compiles into target/ directories that the next build of other
+    # sources overwrites; keep this build's own copy of each
+    dest = os.path.join(BUILD, "build-%s" % fp)
+    staging = dest + ".tmp-%d" % os.getpid()
+    shutil.rmtree(staging, ignore_errors=True)
+    os.makedirs(staging)
+    entries = []
+    for i, e in enumerate(lines[-1].strip().split(os.pathsep)):
+        real = os.path.realpath(e)
+        if real != ROOT and not real.startswith(ROOT + os.sep):
+            entries.append(e)
+            continue
+        name = "%02d-%s" % (i, os.path.basename(real))
+        if os.path.isdir(real):
+            shutil.copytree(real, os.path.join(staging, name))
+        elif os.path.isfile(real):
+            shutil.copy2(real, os.path.join(staging, name))
+        else:
+            continue
+        entries.append(os.path.join(dest, name))
+    shutil.rmtree(dest, ignore_errors=True)
+    os.rename(staging, dest)
+    cp = os.pathsep.join(entries)
+    with open(cache + ".tmp", "w") as fh:
         fh.write(cp)
+    os.replace(cache + ".tmp", cache)
     return cp
 
 
