@@ -1603,28 +1603,6 @@ object Dedup {
       .select(col("id_l"), col("id_r"), round(col("jaccard"), 6).as("jaccard"))
   }
 
-  /** EXACT shingle-CONTAINMENT join: ordered pairs where at least `tau` of
-    * the PART document's shingle set sits inside the WHOLE document —
-    * `c(A→B) = |A∩B| / |A|`. The asymmetric complement to
-    * [[allPairsJaccard]]: a quote, an excerpt, or a page fully embedded in
-    * a larger one has containment ≈ 1 while its Jaccard vanishes as the
-    * host grows, so resemblance dedup never sees it. The emitted
-    * `jaccard` column makes the gap visible (`jaccard < tau` rows are
-    * exactly what resemblance-threshold dedup missed).
-    *
-    * Zero false negatives by prefix filtering on the PART side only: if
-    * `c(A→B) >= tau`, A has at most `floor((1-tau)|A|)` shingles outside
-    * B, so among A's `floor((1-tau)|A|) + 1` rarest shingles at least one
-    * is shared — joining that prefix against the FULL postings of the
-    * corpus finds every qualifying pair (the containment variant of the
-    * Bayardo prefix argument; no length prune applies because B may be
-    * arbitrarily larger). Rarest-first prefixes keep fan-out small;
-    * verification is row-local `array_intersect` on candidate pairs.
-    *
-    * Returns `(id_part, id_whole, sz_part, overlap, containment,
-    * jaccard)`; high `tau` keeps prefixes short — the operator is meant
-    * for the 0.8+ subsumption regime.
-    */
   /** Rarest-first containment prefix of each part-side shingle set —
     * `(doc, token)` rows of the `floor((1-tau)|A|) + 2` lowest-df tokens
     * per doc, the zero-false-negative candidate generator SHARED by
@@ -1660,16 +1638,6 @@ object Dedup {
       .select(col("doc"), col("sz"),
         col("st.token").as("token"), col("st.__df").as("__df"))
 
-  /** Verify-stage shuffle width from the MATERIALIZED candidate count
-    * (the [[graft.ext.DupGraph.triangleCensus]] sizing convention,
-    * applied upward): each verify row carries TWO shingle arrays of
-    * ~`avgSetSize` longs, so at a fixed session width a 25x corpus
-    * drives 25x intersect payload into the same buckets and spills —
-    * the measured q266 10x->25x super-linear segment. Width targets
-    * ~32 MB of array payload per partition, never below the session's
-    * parallelism (a small corpus keeps today's plan), with a sanity
-    * ceiling far above any real candidate frame's need.
-    */
   /** Byte budget for broadcasting the batch-derived sides of the probe
     * joins, derived from the DRIVER heap (the broadcast hash relation is
     * built there, and JVM hash-relation overhead multiplies the
@@ -1710,7 +1678,7 @@ object Dedup {
     * Spark job): above [[probeBroadcastBudget]] the frame loads as-is —
     * a corpus-sized state is already many splits, and the repartition
     * would be a pointless corpus shuffle. Width ≈ one cached partition
-    * per 2 MB of file bytes (compressed parquet expands ~2-4x in cache;
+    * per 64 KB of file bytes (compressed parquet expands ~2-4x in cache;
     * the verify kernels are CPU-dense per byte), capped at the session
     * width so a streamed probe's per-batch task count stays bounded.
     */
@@ -1722,7 +1690,7 @@ object Dedup {
         val p = new org.apache.hadoop.fs.Path(path)
         p.getFileSystem(spark.sparkContext.hadoopConfiguration)
           .getContentSummary(p).getLength
-      } catch { case _: Throwable => Long.MaxValue }
+      } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
     if (bytes > probeBroadcastBudget(spark)) df
     else {
       val w = math.min(sessionWidth(spark).toLong,
@@ -1731,6 +1699,16 @@ object Dedup {
     }
   }
 
+  /** Verify-stage shuffle width from the MATERIALIZED candidate count
+    * (the [[graft.ext.DupGraph.triangleCensus]] sizing convention,
+    * applied upward): each verify row carries TWO shingle arrays of
+    * ~`avgSetSize` longs, so at a fixed session width a 25x corpus
+    * drives 25x intersect payload into the same buckets and spills —
+    * the measured q266 10x->25x super-linear segment. Width targets
+    * ~32 MB of array payload per partition, never below the session's
+    * parallelism (a small corpus keeps today's plan), with a sanity
+    * ceiling far above any real candidate frame's need.
+    */
   private[graft] def verifyPartitionsFor(
       nCand: Long, avgSetSize: Double, defaultParallelism: Int): Int = {
     val bytesPerCand = 2.0 * 8.0 * math.max(avgSetSize, 0.0) + 48.0
@@ -1755,6 +1733,28 @@ object Dedup {
   private def capPrefix(prefix: DataFrame, maxDf: Long): DataFrame =
     if (maxDf == Long.MaxValue) prefix else prefix.where(col("__df") <= maxDf)
 
+  /** EXACT shingle-CONTAINMENT join: ordered pairs where at least `tau` of
+    * the PART document's shingle set sits inside the WHOLE document —
+    * `c(A→B) = |A∩B| / |A|`. The asymmetric complement to
+    * [[allPairsJaccard]]: a quote, an excerpt, or a page fully embedded in
+    * a larger one has containment ≈ 1 while its Jaccard vanishes as the
+    * host grows, so resemblance dedup never sees it. The emitted
+    * `jaccard` column makes the gap visible (`jaccard < tau` rows are
+    * exactly what resemblance-threshold dedup missed).
+    *
+    * Zero false negatives by prefix filtering on the PART side only: if
+    * `c(A→B) >= tau`, A has at most `floor((1-tau)|A|)` shingles outside
+    * B, so among A's `floor((1-tau)|A|) + 1` rarest shingles at least one
+    * is shared — joining that prefix against the FULL postings of the
+    * corpus finds every qualifying pair (the containment variant of the
+    * Bayardo prefix argument; no length prune applies because B may be
+    * arbitrarily larger). Rarest-first prefixes keep fan-out small;
+    * verification is row-local `array_intersect` on candidate pairs.
+    *
+    * Returns `(id_part, id_whole, sz_part, overlap, containment,
+    * jaccard)`; high `tau` keeps prefixes short — the operator is meant
+    * for the 0.8+ subsumption regime.
+    */
   def containmentPairs(
       df: DataFrame, idCol: String, textCol: String,
       tau: Double = 0.9, shingleK: Int = 3,

@@ -101,12 +101,7 @@ object CardStreams {
     Option(stateDir.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith(cardDirName + "_")
         && f.getName != dir.getName)
-      .foreach(deleteRecursively)
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete()
+      .foreach(f => EventStreams.deleteRecursively(f.toPath))
   }
 
   def streamingDataCard(
@@ -117,7 +112,6 @@ object CardStreams {
       rocksdbState: Boolean = false,
       checkpointDir: Option[String] = None,
       batchAdaptive: Option[Boolean] = None): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
     def cardOf(df: DataFrame): DataFrame = df
       .groupBy(col(groupCol))
       .agg(count(lit(1)).as("n_docs"),
@@ -136,8 +130,7 @@ object CardStreams {
     var lastApplied: Long = loadedBatch
     EventStreams.withStatePartitions(spark, shufflePartitions, rocksdbState,
         batchAdaptive) {
-      val writer = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(stagedDir)
+      val writer = EventStreams.stagedStream(spark, stagedDir)
         .writeStream
         .foreachBatch { (batch: Dataset[Row], batchId: Long) => stateLock.synchronized {
           // a replayed batch (crash between persist and offset commit)

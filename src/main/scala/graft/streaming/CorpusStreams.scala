@@ -1,11 +1,11 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.Files
 import java.nio.file.attribute.FileTime
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.ext.Dedup
 
@@ -29,9 +29,9 @@ import graft.ext.Dedup
   * flat over unbounded streams; survivors are written to a parquet file
   * sink per batch (a distributed executor-side write — ids never pass
   * through the driver), so the only driver-side state is the index
-  * DataFrame handles. A production deployment would additionally persist
-  * the index to parquet between runs ([[Dedup.minhashState]] is designed
-  * for exactly that).
+  * DataFrame handles. With `stateDir` the index is also persisted to
+  * parquet between runs ([[Dedup.saveMinhashState]]), so a later run
+  * dedups against everything earlier runs saw.
   */
 object CorpusStreams {
 
@@ -77,7 +77,7 @@ object CorpusStreams {
           }
           val target = dir.resolve(f"batch_$i%04d.parquet")
           Files.move(part, target)
-          deleteRecursively(tmp)
+          EventStreams.deleteRecursively(tmp)
           Files.setLastModifiedTime(target, FileTime.fromMillis(base + i * 2000L))
           target.toFile.deleteOnExit()
         }
@@ -86,14 +86,6 @@ object CorpusStreams {
         scala.concurrent.duration.Duration.Inf))
     } finally pool.shutdown()
     dir.toString
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val listing = Files.walk(p)
-    try listing.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(Files.delete)
-    finally listing.close()
   }
 
   /** Run the streaming dedup over a staged batch directory (one micro-batch
@@ -132,7 +124,6 @@ object CorpusStreams {
       checkpointDir: Option[String] = None,
       batchAdaptive: Option[Boolean] = None): DataFrame = {
     require(checkpointEvery > 0, "checkpointEvery must be positive")
-    val schema = spark.read.parquet(stagedDir).schema
     val params = Dedup.MinhashParams(numHashes, bands, shingleK)
     // `state` is written from the micro-batch thread and read from the
     // caller thread after awaitTermination — synchronize on `stateLock`
@@ -143,58 +134,43 @@ object CorpusStreams {
       stateDir.flatMap(Dedup.loadMinhashState(spark, _, params))
     }
     var batchesSinceCheckpoint = 0
-    val sink = sinkDir.getOrElse {
-      val d = Files.createTempDirectory("graft_corpus_survivors")
-      d.toFile.deleteOnExit()
-      d.toString
-    }
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
-    EventStreams.withStatePartitions(spark, shufflePartitions, rocksdbState,
-        batchAdaptive) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: Dataset[Row], _: Long) =>
-          val b = batch.persist()
-          try stateLock.synchronized {
-            // ONE feature pass per batch: the eagerly-checkpointed state
-            // serves the dedup verify, the corpus probe AND the index
-            // (checkpointing is also required anyway — the batch frame is
-            // only valid inside this callback)
-            val incCk = Dedup.minhashStateCheckpointed(b.toDF(), idCol,
-              textCol, numHashes, bands, shingleK, maxBucket)
-            val kept = Dedup.minhashDedupWithState(b.toDF(), incCk, state,
-              idCol, threshold)
-            // executor-side append; survivor ids never touch the driver
-            kept.select(col(idCol).cast("long").as(idCol))
-              .write.mode("append").parquet(sink)
-            // index ALL seen docs (see class doc)
-            state = Some(state.fold(incCk) { st =>
-              Dedup.MinhashState(st.sets.union(incCk.sets),
-                st.buckets.union(incCk.buckets), st.params)
-            })
-            // the accumulated index is a left-deep union of checkpointed
-            // leaves; the UNION's plan depth still grows with batch count, so
-            // collapse it to a fresh pair of flat leaves every few batches —
-            // keeps per-batch analysis cost O(checkpointEvery), not O(#batches)
-            batchesSinceCheckpoint += 1
-            if (batchesSinceCheckpoint >= checkpointEvery) {
-              state = state.map(st => Dedup.MinhashState(
-                st.sets.localCheckpoint(true), st.buckets.localCheckpoint(true),
-                st.params))
-              batchesSinceCheckpoint = 0
-            }
-          } finally b.unpersist()
+    val survivors = EventStreams.runPerBatchToParquet(spark, stagedDir,
+        "graft_corpus_survivors", sinkDir, None, shufflePartitions,
+        rocksdbState, batchAdaptive, checkpointDir) { b =>
+      stateLock.synchronized {
+        // ONE feature pass per batch: the eagerly-checkpointed state
+        // serves the dedup verify, the corpus probe AND the index
+        // (checkpointing is also required anyway — the batch frame is
+        // only valid inside this callback)
+        val incCk = Dedup.minhashStateCheckpointed(b, idCol,
+          textCol, numHashes, bands, shingleK, maxBucket)
+        // planned against the index BEFORE this batch joins it
+        val kept = Dedup.minhashDedupWithState(b, incCk, state,
+          idCol, threshold)
+        // index ALL seen docs (see class doc)
+        state = Some(state.fold(incCk) { st =>
+          Dedup.MinhashState(st.sets.union(incCk.sets),
+            st.buckets.union(incCk.buckets), st.params)
+        })
+        // the accumulated index is a left-deep union of checkpointed
+        // leaves; the UNION's plan depth still grows with batch count, so
+        // collapse it to a fresh pair of flat leaves every few batches —
+        // keeps per-batch analysis cost O(checkpointEvery), not O(#batches)
+        batchesSinceCheckpoint += 1
+        if (batchesSinceCheckpoint >= checkpointEvery) {
+          state = state.map(st => Dedup.MinhashState(
+            st.sets.localCheckpoint(true), st.buckets.localCheckpoint(true),
+            st.params))
+          batchesSinceCheckpoint = 0
         }
-        .trigger(Trigger.AvailableNow())
-      val started = checkpointDir
-        .fold(q)(d => q.option("checkpointLocation", d))
-        .start()
-      started.awaitTermination()
+        // survivor ids only; the run form appends them executor-side
+        kept.select(col(idCol).cast("long").as(idCol))
+      }
     }
     stateLock.synchronized {
       for (dir <- stateDir; st <- state) Dedup.saveMinhashState(st, dir, params)
     }
-    spark.read.parquet(sink)
+    survivors
   }
 
   /** Streaming face of [[graft.ext.Dedup.paragraphDedup]] (keep-first mode):
@@ -237,51 +213,37 @@ object CorpusStreams {
       stateDir: Option[String] = None,
       batchAdaptive: Option[Boolean] = None): DataFrame = {
     require(checkpointEvery > 0, "checkpointEvery must be positive")
-    val schema = spark.read.parquet(stagedDir).schema
     val stateLock = new Object
     var seen: Option[DataFrame] = stateLock.synchronized {
       stateDir.flatMap(Dedup.loadParagraphState(spark, _, sepPattern))
     }
     var batchesSinceCollapse = 0
-    val sink = sinkDir.getOrElse {
-      val d = Files.createTempDirectory("graft_segment_dedup")
-      d.toFile.deleteOnExit()
-      d.toString
-    }
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
-    EventStreams.withStatePartitions(spark, shufflePartitions,
-        adaptive = batchAdaptive) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: Dataset[Row], _: Long) =>
-          val b = batch.persist()
-          try stateLock.synchronized {
-            Dedup.paragraphDedup(b.toDF(), idCol, textCol, sepPattern,
-                joinSep, dropAboveCount = None, priorSeenHashes = seen)
-              .write.mode("append").parquet(sink)
-            // eager checkpoint: the batch frame is only valid inside this
-            // callback, and the state must outlive it
-            val newHashes = Dedup.paragraphHashes(b.toDF(), idCol, textCol,
-              sepPattern).select(col("seg_h")).distinct().localCheckpoint()
-            var merged = seen.fold(newHashes)(_.unionByName(newHashes))
-            batchesSinceCollapse += 1
-            if (batchesSinceCollapse >= checkpointEvery) {
-              merged = merged.distinct().localCheckpoint()
-              batchesSinceCollapse = 0
-            }
-            seen = Some(merged)
-          } finally b.unpersist()
+    val screened = EventStreams.runPerBatchToParquet(spark, stagedDir,
+        "graft_segment_dedup", sinkDir, Some(queryName), shufflePartitions,
+        batchAdaptive = batchAdaptive) { b =>
+      stateLock.synchronized {
+        // planned against the seen set BEFORE this batch joins it
+        val kept = Dedup.paragraphDedup(b, idCol, textCol, sepPattern,
+          joinSep, dropAboveCount = None, priorSeenHashes = seen)
+        // eager checkpoint: the batch frame is only valid inside this
+        // callback, and the state must outlive it
+        val newHashes = Dedup.paragraphHashes(b, idCol, textCol,
+          sepPattern).select(col("seg_h")).distinct().localCheckpoint()
+        var merged = seen.fold(newHashes)(_.unionByName(newHashes))
+        batchesSinceCollapse += 1
+        if (batchesSinceCollapse >= checkpointEvery) {
+          merged = merged.distinct().localCheckpoint()
+          batchesSinceCollapse = 0
         }
-        .trigger(Trigger.AvailableNow())
-        .queryName(queryName)
-        .start()
-      q.awaitTermination()
+        seen = Some(merged)
+        kept
+      }
     }
     stateLock.synchronized {
       for (dir <- stateDir; st <- seen)
         Dedup.saveParagraphState(st, dir, sepPattern)
     }
-    spark.read.parquet(sink)
+    screened
   }
 
   /** Streaming face of [[graft.ext.AnnIndex.probe]]: probe each arriving
@@ -321,35 +283,16 @@ object CorpusStreams {
         "annProbeStreaming: refineWiden needs an index built with " +
           "refineDim > 0 — this state has no SQ8 refine tier")
     }
-    val schema = spark.read.parquet(stagedDir).schema
-    val sink = sinkDir.getOrElse {
-      val d = Files.createTempDirectory("graft_ann_hits")
-      d.toFile.deleteOnExit()
-      d.toString
+    EventStreams.runPerBatchToParquet(spark, stagedDir, "graft_ann_hits",
+        sinkDir, Some(queryName), shufflePartitions,
+        batchAdaptive = batchAdaptive) { b =>
+      refineWiden match {
+        case Some(w) => graft.ext.AnnIndex.probeRefined(state, b, vecCol,
+          idCol, k = k, nProbe = nProbe, widen = w)
+        case None => graft.ext.AnnIndex.probe(state, b, vecCol, idCol,
+          k = k, nProbe = nProbe)
+      }
     }
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
-    EventStreams.withStatePartitions(spark, shufflePartitions,
-        adaptive = batchAdaptive) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: Dataset[Row], _: Long) =>
-          val b = batch.persist()
-          try {
-            val hits = refineWiden match {
-              case Some(w) => graft.ext.AnnIndex.probeRefined(state,
-                b.toDF(), vecCol, idCol, k = k, nProbe = nProbe, widen = w)
-              case None => graft.ext.AnnIndex.probe(state, b.toDF(),
-                vecCol, idCol, k = k, nProbe = nProbe)
-            }
-            hits.write.mode("append").parquet(sink)
-          } finally b.unpersist()
-        }
-        .trigger(Trigger.AvailableNow())
-        .queryName(queryName)
-        .start()
-      q.awaitTermination()
-    }
-    spark.read.parquet(sink)
   }
 
   /** Streaming face of [[graft.ext.Dedup.containmentProbe]]: probe each
@@ -378,30 +321,11 @@ object CorpusStreams {
       shufflePartitions: Option[Int] = None,
       maxDf: Long = Long.MaxValue,
       batchAdaptive: Option[Boolean] = None): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val sink = sinkDir.getOrElse {
-      val d = Files.createTempDirectory("graft_containment_hits")
-      d.toFile.deleteOnExit()
-      d.toString
+    EventStreams.runPerBatchToParquet(spark, stagedDir,
+        "graft_containment_hits", sinkDir, Some(queryName), shufflePartitions,
+        batchAdaptive = batchAdaptive) {
+      Dedup.containmentProbe(_, state, idCol, textCol, tau, shingleK, maxDf)
     }
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
-    EventStreams.withStatePartitions(spark, shufflePartitions,
-        adaptive = batchAdaptive) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val b = batch.persist()
-          try graft.ext.Dedup.containmentProbe(b.toDF(), state, idCol,
-              textCol, tau, shingleK, maxDf)
-            .write.mode("append").parquet(sink)
-          finally b.unpersist()
-        }
-        .trigger(Trigger.AvailableNow())
-        .queryName(queryName)
-        .start()
-      q.awaitTermination()
-    }
-    spark.read.parquet(sink)
   }
 
   /** Streaming face of [[graft.ext.Dedup.jaccardProbe]]: probe each
@@ -424,30 +348,11 @@ object CorpusStreams {
       shufflePartitions: Option[Int] = None,
       maxDf: Long = Long.MaxValue,
       batchAdaptive: Option[Boolean] = None): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val sink = sinkDir.getOrElse {
-      val d = Files.createTempDirectory("graft_resemblance_hits")
-      d.toFile.deleteOnExit()
-      d.toString
+    EventStreams.runPerBatchToParquet(spark, stagedDir,
+        "graft_resemblance_hits", sinkDir, Some(queryName), shufflePartitions,
+        batchAdaptive = batchAdaptive) {
+      Dedup.jaccardProbe(_, state, idCol, textCol, maxDf)
     }
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
-    EventStreams.withStatePartitions(spark, shufflePartitions,
-        adaptive = batchAdaptive) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val b = batch.persist()
-          try graft.ext.Dedup.jaccardProbe(b.toDF(), state, idCol,
-              textCol, maxDf)
-            .write.mode("append").parquet(sink)
-          finally b.unpersist()
-        }
-        .trigger(Trigger.AvailableNow())
-        .queryName(queryName)
-        .start()
-      q.awaitTermination()
-    }
-    spark.read.parquet(sink)
   }
 
   /** Streaming face of [[graft.ext.NgramLm.score]]: score each arriving
@@ -468,26 +373,10 @@ object CorpusStreams {
       sinkDir: Option[String] = None,
       shufflePartitions: Option[Int] = None,
       batchAdaptive: Option[Boolean] = None): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val sink = sinkDir.getOrElse {
-      val d = Files.createTempDirectory("graft_lm_scores")
-      d.toFile.deleteOnExit()
-      d.toString
+    EventStreams.runPerBatchToParquet(spark, stagedDir, "graft_lm_scores",
+        sinkDir, None, shufflePartitions, batchAdaptive = batchAdaptive) {
+      graft.ext.NgramLm.score(_, idCol, textCol, model)
     }
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
-    EventStreams.withStatePartitions(spark, shufflePartitions,
-        adaptive = batchAdaptive) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: Dataset[Row], _: Long) =>
-          graft.ext.NgramLm.score(batch.toDF(), idCol, textCol, model)
-            .write.mode("append").parquet(sink)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.read.parquet(sink)
   }
 
   /** Streaming face of [[graft.ext.HeavyHitters.frequentItems]] over a
@@ -514,32 +403,20 @@ object CorpusStreams {
       maxStateBytes: Long = Long.MaxValue): DataFrame = {
     import graft.ext.HeavyHitters
     HeavyHitters.requireGuarantee(minShare, k)
-    val schema = spark.read.parquet(stagedDir).schema
     def tokens(df: DataFrame): DataFrame = df.select(
       explode(graft.functions.text.tokens(col(textCol))).as(itemName))
-    val stream = tokens(spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir))
-    val agg = stream.agg(
+    val agg = tokens(EventStreams.stagedStream(spark, stagedDir)).agg(
       graft.expressions.MisraGriesAgg.misraGriesSummary(col(itemName), k)
         .as("mg"),
       count(col(itemName)).as("n"))
-    EventStreams.withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = agg.writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // bounded by design at ONE row holding <= k counters — measured
-      EventStreams.auditStateSizeOrDrop(spark, q, "heavy-hitters monitor",
-        maxStateRows, queryName, maxStateBytes)
-    }
+    // bounded by design at ONE row holding <= k counters — measured
+    val summary = EventStreams.runToMemory(agg, queryName, OutputMode.Complete(),
+      shufflePartitions, rocksdbState, Some(EventStreams.StateCap(
+        "heavy-hitters monitor", maxStateRows, maxStateBytes)))
     // bounded: at most one row, <= k strings (empty when zero batches ran)
-    val first = spark.table(queryName)
+    val first = summary
       .select(map_keys(col("mg")).as("cands"), col("n"))
       .collect().headOption
-    spark.catalog.dropTempView(queryName)
     HeavyHitters.recountExact(tokens(spark.read.parquet(stagedDir)),
       col(itemName),
       first.map(_.getSeq[String](0)).getOrElse(Nil),
@@ -564,27 +441,12 @@ object CorpusStreams {
       sinkDir: Option[String] = None,
       shufflePartitions: Option[Int] = None,
       batchAdaptive: Option[Boolean] = None): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val sink = sinkDir.getOrElse {
-      val d = Files.createTempDirectory("graft_novelty_scores")
-      d.toFile.deleteOnExit()
-      d.toString
+    EventStreams.runPerBatchToParquet(spark, stagedDir,
+        "graft_novelty_scores", sinkDir, None, shufflePartitions,
+        batchAdaptive = batchAdaptive) {
+      graft.ext.Decontaminate.noveltyScores(
+        _, idCol, textCol, reference, refTextCol, n)
     }
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
-    EventStreams.withStatePartitions(spark, shufflePartitions,
-        adaptive = batchAdaptive) {
-      val q = stream.writeStream
-        .foreachBatch { (batch: Dataset[Row], _: Long) =>
-          graft.ext.Decontaminate.noveltyScores(
-              batch.toDF(), idCol, textCol, reference, refTextCol, n)
-            .write.mode("append").parquet(sink)
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.read.parquet(sink)
   }
 
   /** [[graft.ext.Report.tokenDrift]] with the CANDIDATE side arriving as a
@@ -609,28 +471,18 @@ object CorpusStreams {
       maxStateRows: Long = Long.MaxValue,
       maxStateBytes: Long = Long.MaxValue): DataFrame = {
     import graft.functions.text
-    val schema = spark.read.parquet(stagedDir).schema
-    val stream0 = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
+    val stream0 = EventStreams.stagedStream(spark, stagedDir)
     val stream = streamFilter.fold(stream0)(stream0.where)
     val agg = stream
       .select(explode(text.tokens(col(textCol))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("n_b"))
-    EventStreams.withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = agg.writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // honest floor = |vocabulary| rows (the scaladoc's declared bound);
-      // the audit is where a vocabulary-shaped state stops being a
-      // claim — cap it when only the top drifts matter (the MG pass)
-      EventStreams.auditStateSizeOrDrop(spark, q, "token-drift monitor",
-        maxStateRows, queryName, maxStateBytes)
-    }
-    val streamedCounts = EventStreams.drainMemorySink(spark, queryName)
+    // honest floor = |vocabulary| rows (the scaladoc's declared bound);
+    // the audit is where a vocabulary-shaped state stops being a
+    // claim — cap it when only the top drifts matter (the MG pass)
+    val streamedCounts = EventStreams.runToMemory(agg, queryName,
+      OutputMode.Complete(), shufflePartitions, rocksdbState,
+      Some(EventStreams.StateCap("token-drift monitor", maxStateRows,
+        maxStateBytes)))
     val baseCounts = baseline
       .select(explode(text.tokens(col(baselineTextCol))).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("n_a"))
@@ -653,33 +505,14 @@ object CorpusStreams {
       rocksdbState: Boolean = false,
       maxStateRows: Long = Long.MaxValue,
       maxStateBytes: Long = Long.MaxValue): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
-    val agg = graft.ext.Sketches.hllRegisters(stream, Seq(groupCol), valueCol, p)
-    EventStreams.withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = agg.writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // bounded by design at groups x 2^p register rows — measured
-      EventStreams.auditStateSizeOrDrop(spark, q, "hll-registers monitor",
-        maxStateRows, queryName, maxStateBytes)
-    }
-    EventStreams.drainMemorySink(spark, queryName)
+    val agg = graft.ext.Sketches.hllRegisters(
+      EventStreams.stagedStream(spark, stagedDir), Seq(groupCol), valueCol, p)
+    // bounded by design at groups x 2^p register rows — measured
+    EventStreams.runToMemory(agg, queryName, OutputMode.Complete(),
+      shufflePartitions, rocksdbState, Some(EventStreams.StateCap(
+        "hll-registers monitor", maxStateRows, maxStateBytes)))
   }
 
-  /** [[graft.ext.Decontaminate.semanticHitsLiteral]] over an ARRIVING
-    * corpus — the deployment shape of the semantic screen ("score each
-    * new crawl shard against the frozen eval set as it lands"). The
-    * operator is STATELESS (one row-local argmin per vector, no shuffle,
-    * no state store), so the stream runs in plain Append mode and the
-    * result equals the batch screen row-for-row under any cut — q228's
-    * oracle gates this path verbatim.
-    */
   /** Quantized linear classifier at INGEST time: the
     * [[graft.functions.text.hashedLinearScore]] fold is one row-local
     * codegen'd expression over the weight table riding in the plan as an
@@ -693,24 +526,13 @@ object CorpusStreams {
       spark: SparkSession, stagedDir: String, idCol: String, textCol: String,
       weights: Array[Int], bias: Long, queryName: String,
       shufflePartitions: Option[Int] = None): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
-    val scored = stream.select(col(idCol),
+    val scored = EventStreams.stagedStream(spark, stagedDir).select(col(idCol),
         graft.functions.text.hashedLinearScore(col(textCol), weights, bias)
           .as("score"))
       .withColumn("label",
         when(col("score") >= 0, lit("keep")).otherwise(lit("drop")))
-    EventStreams.withStatePartitions(spark, shufflePartitions) {
-      val q = scored.writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    EventStreams.drainMemorySink(spark, queryName)
+    EventStreams.runToMemory(scored, queryName, OutputMode.Append(),
+      shufflePartitions)
   }
 
   /** Row-local clamped fixed-width score bin — the state key of the
@@ -753,53 +575,41 @@ object CorpusStreams {
       shufflePartitions: Option[Int] = None,
       maxStateRows: Long = Long.MaxValue,
       maxStateBytes: Long = Long.MaxValue): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
-    val scored = stream.where(col(textCol).isNotNull)
+    val scored = EventStreams.stagedStream(spark, stagedDir)
+      .where(col(textCol).isNotNull)
       .select(col(groupCol), positive.as("__pos"),
         clampedScoreBucket(graft.ext.Classifier.nbScoreColumn(
           col(textCol), weights, bias, buckets),
           scoreBinWidth, maxAbsBucket).as("score"))
     val counts = graft.ops.Profile.aucCounts(
       scored, Seq(groupCol), "score", col("__pos"))
-    EventStreams.withStatePartitions(spark, shufflePartitions) {
-      val q = counts.writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // the clamped bins bound state at groups x (2*maxAbsBucket + 1) x 2
-      // BY DESIGN — the audit turns that argument into a measurement
-      EventStreams.auditStateSizeOrDrop(spark, q, "classifier-auc monitor",
-        maxStateRows, queryName, maxStateBytes)
-    }
+    // the clamped bins bound state at groups x (2*maxAbsBucket + 1) x 2
+    // BY DESIGN — the audit turns that argument into a measurement
     graft.ops.Profile.aucFromCounts(
-      EventStreams.drainMemorySink(spark, queryName), Seq(groupCol))
+      EventStreams.runToMemory(counts, queryName, OutputMode.Complete(),
+        shufflePartitions, cap = Some(EventStreams.StateCap(
+          "classifier-auc monitor", maxStateRows, maxStateBytes))),
+      Seq(groupCol))
   }
 
+  /** [[graft.ext.Decontaminate.semanticHitsLiteral]] over an ARRIVING
+    * corpus — the deployment shape of the semantic screen ("score each
+    * new crawl shard against the frozen eval set as it lands"). The
+    * operator is STATELESS (one row-local argmin per vector, no shuffle,
+    * no state store), so the stream runs in plain Append mode and the
+    * result equals the batch screen row-for-row under any cut — q228's
+    * oracle gates this path verbatim.
+    */
   def semanticScreenStreaming(
       spark: SparkSession, stagedDir: String, idCol: String, vecCol: String,
       evalVecs: Seq[(Long, Seq[Double])], tau: Double, queryName: String,
       corpusFilter: Option[org.apache.spark.sql.Column] = None,
       shufflePartitions: Option[Int] = None): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val stream0 = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
+    val stream0 = EventStreams.stagedStream(spark, stagedDir)
     val stream = corpusFilter.map(stream0.where).getOrElse(stream0)
     val screened = graft.ext.Decontaminate.semanticHitsLiteral(
       stream, idCol, vecCol, evalVecs, tau)
-    EventStreams.withStatePartitions(spark, shufflePartitions) {
-      val q = screened.writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    EventStreams.drainMemorySink(spark, queryName)
+    EventStreams.runToMemory(screened, queryName, OutputMode.Append(),
+      shufflePartitions)
   }
 }

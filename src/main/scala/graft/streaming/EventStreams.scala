@@ -1,6 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
@@ -115,22 +117,118 @@ object EventStreams {
     }
   }
 
-  /** LOUD state-store telemetry for the Complete-mode monitors (round-16
-    * verdict #5): the scaladocs ARGUE each monitor's state is bounded by
-    * design (clamped bins, MG candidates, sketch registers, |groups|
-    * rows); this reads the finished query's progress history and REPORTS
-    * the measured maximum — total state rows and state-store bytes
-    * across micro-batches — on stderr, the `maxBucket` telemetry
-    * convention applied to streaming state. With `maxStateRows` set the
-    * audit becomes a cap: a monitor whose key space turns out to grow
-    * with the corpus (exactly what the bounded designs exist to prevent)
-    * fails loudly instead of silently eating the state store. Rows are
-    * the primary cap currency because they are deterministic per
-    * fixture; `maxStateBytes` (round-17) additionally caps the
-    * engine-reported byte high-water — provider-dependent in value, but
-    * the store's OWN number under both the heap-map and RocksDB
-    * providers, so a byte budget holds wherever the state lives.
+  /** A memory-sink face's state audit (see [[auditStateSize]]): `what`
+    * names the monitor in the report; a `Long.MaxValue` cap only reports.
     */
+  private[streaming] final case class StateCap(what: String, maxRows: Long,
+      maxBytes: Long)
+
+  /** The one driver of the memory-sink faces: run `frame` to completion
+    * (AvailableNow) into a memory sink named `queryName` under
+    * [[withStatePartitions]], audit its state when `cap` is given, and
+    * return the drained rows ([[drainMemorySink]]).
+    *
+    * The sink's temp view is registered at `start()`, so a query that
+    * then fails (or breaches its cap) would leave the view — and every
+    * row the sink holds on the driver — registered for the session's
+    * lifetime. Any failure of start, await or audit therefore drops the
+    * view before it propagates. A name another ACTIVE query still holds
+    * (start refused a duplicate) is that query's view and is left alone.
+    */
+  private[streaming] def runToMemory(
+      frame: DataFrame, queryName: String, mode: OutputMode,
+      shufflePartitions: Option[Int], rocksdb: Boolean = false,
+      cap: Option[StateCap] = None): DataFrame = {
+    val spark = frame.sparkSession
+    withStatePartitions(spark, shufflePartitions, rocksdb) {
+      try {
+        val q = frame.writeStream
+          .outputMode(mode)
+          .format("memory")
+          .queryName(queryName)
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        cap.foreach(c => auditStateSize(q, c.what, c.maxRows, c.maxBytes))
+      } catch {
+        case e: Throwable =>
+          if (!spark.streams.active.exists(_.name == queryName))
+            try spark.catalog.dropTempView(queryName)
+            catch { case NonFatal(_) => () } // release is best-effort
+          throw e
+      }
+    }
+    drainMemorySink(spark, queryName)
+  }
+
+  /** The one driver of the per-batch parquet faces: stream the staged
+    * one-file-per-trigger source ([[stagedStream]]) and, per micro-batch,
+    * persist the batch, run `body` on it and APPEND the returned frame to
+    * the sink executor-side (no result row passes through the driver),
+    * then unpersist. Returns the sink read back.
+    *
+    * `sinkDir = None` allocates a fresh temp sink (prefix `sinkPrefix`)
+    * removed only at JVM exit — a long-lived caller passes a sink it
+    * owns, where results append across calls. `checkpointDir` records
+    * which staged files each committed batch consumed, so a restarted
+    * run skips them. Stateful faces fold their own state inside `body`
+    * (under their own lock); the frame `body` returns must not depend on
+    * anything the body mutates afterwards.
+    */
+  private[streaming] def runPerBatchToParquet(
+      spark: SparkSession, stagedDir: String, sinkPrefix: String,
+      sinkDir: Option[String], queryName: Option[String],
+      shufflePartitions: Option[Int], rocksdb: Boolean = false,
+      batchAdaptive: Option[Boolean] = None,
+      checkpointDir: Option[String] = None)(
+      body: DataFrame => DataFrame): DataFrame = {
+    val stream = stagedStream(spark, stagedDir)
+    val sink = sinkDir.getOrElse {
+      val d = java.nio.file.Files.createTempDirectory(sinkPrefix)
+      d.toFile.deleteOnExit()
+      d.toString
+    }
+    withStatePartitions(spark, shufflePartitions, rocksdb, batchAdaptive) {
+      val writer = stream.writeStream
+        .foreachBatch { (batch: Dataset[Row], _: Long) =>
+          val b = batch.persist()
+          try body(b.toDF()).write.mode("append").parquet(sink)
+          finally b.unpersist()
+        }
+        .trigger(Trigger.AvailableNow())
+      val named = queryName.fold(writer)(writer.queryName)
+      checkpointDir.fold(named)(d => named.option("checkpointLocation", d))
+        .start()
+        .awaitTermination()
+    }
+    spark.read.parquet(sink)
+  }
+
+  /** A staged directory (see [[CorpusStreams.stageIdSlices]]) as a file
+    * stream of ONE file per trigger — each staged slice is one
+    * micro-batch, replayed in mod-time order.
+    */
+  private[streaming] def stagedStream(
+      spark: SparkSession, stagedDir: String): DataFrame =
+    spark.readStream.schema(spark.read.parquet(stagedDir).schema)
+      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
+
+  /** An events file (or directory) as a file stream with no per-trigger
+    * cap, `ts` normalized — the source of the watermark faces.
+    */
+  private def eventStream(spark: SparkSession, eventsPath: String): DataFrame =
+    normalizeTs(spark.readStream.schema(spark.read.parquet(eventsPath).schema)
+      .parquet(stageStreamDir(eventsPath)))
+
+  /** Remove a file or directory tree (symlinks are removed, not followed). */
+  private[streaming] def deleteRecursively(p: java.nio.file.Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    val listing = java.nio.file.Files.walk(p)
+    try listing.sorted(java.util.Comparator.reverseOrder())
+      .iterator().asScala.foreach(java.nio.file.Files.delete)
+    finally listing.close()
+  }
+
   /** The engine-reported maxima the last [[auditStateSize]] measured —
     * rows and bytes are the state store's OWN numbers
     * (`StateOperatorProgress.numRowsTotal` / `memoryUsedBytes`, which the
@@ -147,6 +245,22 @@ object EventStreams {
   // or misattributed record instead of silently trusting it
   @volatile private[streaming] var lastStateAudit: Option[StateAudit] = None
 
+  /** LOUD state-store telemetry for the Complete-mode monitors (round-16
+    * verdict #5): the scaladocs ARGUE each monitor's state is bounded by
+    * design (clamped bins, MG candidates, sketch registers, |groups|
+    * rows); this reads the finished query's progress history and REPORTS
+    * the measured maximum — total state rows and state-store bytes
+    * across micro-batches — on stderr, the `maxBucket` telemetry
+    * convention applied to streaming state. With `maxStateRows` set the
+    * audit becomes a cap: a monitor whose key space turns out to grow
+    * with the corpus (exactly what the bounded designs exist to prevent)
+    * fails loudly instead of silently eating the state store. Rows are
+    * the primary cap currency because they are deterministic per
+    * fixture; `maxStateBytes` (round-17) additionally caps the
+    * engine-reported byte high-water — provider-dependent in value, but
+    * the store's OWN number under both the heap-map and RocksDB
+    * providers, so a byte budget holds wherever the state lives.
+    */
   private[streaming] def auditStateSize(
       q: org.apache.spark.sql.streaming.StreamingQuery, what: String,
       maxStateRows: Long, maxStateBytes: Long = Long.MaxValue): Unit = {
@@ -181,26 +295,6 @@ object EventStreams {
     }
   }
 
-  /** [[auditStateSize]] with guaranteed sink release on breach: the cap
-    * throwing must not LEAK the Complete-mode memory sink's driver-held
-    * rows (round-16 self-review — every monitor audits BEFORE its
-    * drain, so a breached cap would leave the temp view registered for
-    * the session's lifetime, pinning the full streamed aggregate on the
-    * driver across repeated breached runs). The view is dropped before
-    * the breach propagates; the success path leaves it for the drain.
-    */
-  private[streaming] def auditStateSizeOrDrop(
-      spark: SparkSession, q: org.apache.spark.sql.streaming.StreamingQuery,
-      what: String, maxStateRows: Long, queryName: String,
-      maxStateBytes: Long = Long.MaxValue): Unit =
-    try auditStateSize(q, what, maxStateRows, maxStateBytes)
-    catch {
-      case e: IllegalStateException =>
-        try spark.catalog.dropTempView(queryName)
-        catch { case _: Exception => () } // release is best-effort
-        throw e
-    }
-
   /** Drain a finished memory-sink table into a local DataFrame and DROP the
     * sink's temp view. The memory sink already holds its rows on the driver;
     * draining adds nothing, but dropping the view releases them when the
@@ -208,7 +302,7 @@ object EventStreams {
     * pins its full result on the driver forever (a 100-query battery
     * accumulates them all).
     */
-  private[streaming] def drainMemorySink(spark: SparkSession, name: String): DataFrame = {
+  private def drainMemorySink(spark: SparkSession, name: String): DataFrame = {
     val t = spark.table(name)
     val rows = t.collect()
     val schema = t.schema
@@ -261,24 +355,14 @@ object EventStreams {
       eventKey: String, dimKey: String, segCol: String, queryName: String,
       shufflePartitions: Option[Int] = None,
       rocksdbState: Boolean = false): DataFrame = {
-    val schema = spark.read.parquet(eventsPath).schema
-    val stream = normalizeTs(
-      spark.readStream.schema(schema).parquet(stageStreamDir(eventsPath)))
+    val stream = eventStream(spark, eventsPath)
     val agg = stream
       .join(broadcast(dim.select(col(dimKey), col(segCol))),
         stream(eventKey) === dim(dimKey), "left")
       .groupBy(coalesce(col(segCol), lit("UNKNOWN")).as("segment"))
       .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value"))
-    withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    drainMemorySink(spark, queryName)
+    runToMemory(agg, queryName, OutputMode.Complete(), shufflePartitions,
+      rocksdbState)
   }
 
   /** Streaming approximate distinct count per group — the KMV sketch is
@@ -298,26 +382,14 @@ object EventStreams {
       maxStateRows: Long = Long.MaxValue,
       maxStateBytes: Long = Long.MaxValue): DataFrame = {
     import graft.ext.Sketches
-    val schema = spark.read.parquet(eventsPath).schema
-    val stream = normalizeTs(
-      spark.readStream.schema(schema).parquet(stageStreamDir(eventsPath)))
-    val agg = stream
+    val agg = eventStream(spark, eventsPath)
       .groupBy(col(groupCol))
       .agg(graft.expressions.BottomKAgg
         .bottomKHashes(Sketches.kmvHash(col(valueCol)), k).as("bk"))
-    withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // bounded by design at |groups| rows of k longs — measured + capped
-      auditStateSizeOrDrop(spark, q, "distinct-estimate monitor",
-        maxStateRows, queryName, maxStateBytes)
-    }
-    drainMemorySink(spark, queryName)
+    // bounded by design at |groups| rows of k longs — measured + capped
+    runToMemory(agg, queryName, OutputMode.Complete(), shufflePartitions,
+        rocksdbState,
+        Some(StateCap("distinct-estimate monitor", maxStateRows, maxStateBytes)))
       .withColumn("n_est", Sketches.kmvEstimate(k))
       .select(col(groupCol), col("n_est"))
   }
@@ -338,26 +410,16 @@ object EventStreams {
       shufflePartitions: Option[Int] = None,
       rocksdbState: Boolean = false): DataFrame = {
     import graft.ext.Sketches
-    val schema = spark.read.parquet(eventsPath).schema
-    val stream = normalizeTs(
-      spark.readStream.schema(schema).parquet(stageStreamDir(eventsPath)))
-    val agg = stream
+    val agg = eventStream(spark, eventsPath)
       .where(col(valueCol).isNotNull && col(hashKeyCol).isNotNull)
       .groupBy(col(groupCol))
       .agg(graft.expressions.BottomKSample.bottomKSample(
         Sketches.kmvHash(col(hashKeyCol)), col(valueCol).cast("double"), k)
         .as("__vals"))
-    withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
     Sketches.quantilePicks(
-      drainMemorySink(spark, queryName), Seq(groupCol), qs, interpolate)
+      runToMemory(agg, queryName, OutputMode.Complete(), shufflePartitions,
+        rocksdbState),
+      Seq(groupCol), qs, interpolate)
   }
 
   /** Batch twin: tumbling-window counts/sums per event_type. */
@@ -378,25 +440,14 @@ object EventStreams {
       windowLen: String = "1 hour", watermark: String = "10 minutes",
       shufflePartitions: Option[Int] = None,
       rocksdbState: Boolean = false): DataFrame = {
-    val schema = spark.read.parquet(eventsPath).schema
-    val stream = normalizeTs(
-      spark.readStream.schema(schema).parquet(stageStreamDir(eventsPath)))
-    val agg = stream
+    val agg = eventStream(spark, eventsPath)
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), windowLen).as("w"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value"))
       .select(unix_timestamp(col("w.start")).as("wstart"), col("event_type"),
         col("n_events"), col("sum_value"))
-    withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = agg.writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    drainMemorySink(spark, queryName)
+    runToMemory(agg, queryName, OutputMode.Complete(), shufflePartitions,
+      rocksdbState)
   }
 
   /** Streaming deduplication: stage the source file TWICE so the stream
@@ -441,20 +492,11 @@ object EventStreams {
       }
     }
     val schema = spark.read.parquet(eventsPath).schema
-    val stream = normalizeTs(spark.readStream.schema(schema).parquet(d.toString))
-    withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = stream
-        .withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(keys)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    drainMemorySink(spark, queryName)
+    val deduped = normalizeTs(spark.readStream.schema(schema).parquet(d.toString))
+      .withWatermark("ts", watermark)
+      .dropDuplicatesWithinWatermark(keys)
+    runToMemory(deduped, queryName, OutputMode.Append(), shufflePartitions,
+      rocksdbState)
   }
 
   /** The ONE gap-rule session-id assignment (lag -> flag -> running sum)
@@ -552,27 +594,17 @@ object EventStreams {
       userMod: Long = 1L,
       shufflePartitions: Option[Int] = None,
       rocksdbState: Boolean = false): DataFrame = {
-    val schema = spark.read.parquet(eventsPath).schema
     // userMod > 1 bounds join state to a deterministic 1/userMod user slice
     // — same machinery, proportionally less per-row state-store traffic
     def stream() = {
-      val s0 = normalizeTs(
-        spark.readStream.schema(schema).parquet(stageStreamDir(eventsPath)))
+      val s0 = eventStream(spark, eventsPath)
       if (userMod > 1L) s0.where(pmod(col("user_id"), lit(userMod)) === 0L) else s0
     }
     // A stream-stream join runs FOUR state stores per shuffle partition per
     // micro-batch, so this query benefits most from bounding them.
-    withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = correlate(stream(), stream(), typeA, typeB, withinMinutes, watermark)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    drainMemorySink(spark, queryName)
+    runToMemory(
+      correlate(stream(), stream(), typeA, typeB, withinMinutes, watermark),
+      queryName, OutputMode.Append(), shufflePartitions, rocksdbState)
   }
 
   /** Stateful streaming twin of [[graft.ops.Behavior.transitions]]: one
@@ -650,19 +682,9 @@ object EventStreams {
       spark: SparkSession, stagedDir: String, queryName: String,
       shufflePartitions: Option[Int] = None,
       rocksdbState: Boolean = false): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val stream = normalizeTs(spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir))
-    withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = transitionsStateful(stream).writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val pairs = drainMemorySink(spark, queryName)
+    val pairs = runToMemory(
+      transitionsStateful(normalizeTs(stagedStream(spark, stagedDir))),
+      queryName, OutputMode.Append(), shufflePartitions, rocksdbState)
     pairs.groupBy(col("prev_type"), col("next_type"))
       .agg(sum(col("n")).as("n"))
       .withColumn("prob",
@@ -735,20 +757,10 @@ object EventStreams {
       stages: Seq[String],
       shufflePartitions: Option[Int] = None,
       rocksdbState: Boolean = false): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val stream = normalizeTs(spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir))
-    withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = funnelStateful(stream, stages).writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
     import spark.implicits._
-    val counts = drainMemorySink(spark, queryName)
+    val counts = runToMemory(
+        funnelStateful(normalizeTs(stagedStream(spark, stagedDir)), stages),
+        queryName, OutputMode.Append(), shufflePartitions, rocksdbState)
       .groupBy(col("stage_idx")).agg(count(lit(1)).as("n_users"))
     val stageDf = stages.zipWithIndex
       .map { case (st, k) => (k, st) }.toDF("stage_idx", "stage")
@@ -836,19 +848,10 @@ object EventStreams {
       windowDays: Int = 7,
       shufflePartitions: Option[Int] = None,
       rocksdbState: Boolean = false): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val stream = normalizeTs(spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir))
-    withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = rollingActiveStateful(stream, windowDays).writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    drainMemorySink(spark, queryName)
+    runToMemory(
+        rollingActiveStateful(normalizeTs(stagedStream(spark, stagedDir)),
+          windowDays),
+        queryName, OutputMode.Append(), shufflePartitions, rocksdbState)
       .groupBy(col("window_day")).agg(count(lit(1)).as("n_active"))
   }
 
@@ -864,20 +867,12 @@ object EventStreams {
       groupCols: Seq[String], valCol: String,
       shufflePartitions: Option[Int] = None,
       rocksdbState: Boolean = false): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val stream = normalizeTs(spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir))
-    val daily = graft.ops.Behavior.dailyTotals(stream, groupCols, valCol)
-    withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = daily.writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    graft.ops.Behavior.cusumFromDaily(drainMemorySink(spark, queryName), groupCols)
+    val daily = graft.ops.Behavior.dailyTotals(
+      normalizeTs(stagedStream(spark, stagedDir)), groupCols, valCol)
+    graft.ops.Behavior.cusumFromDaily(
+      runToMemory(daily, queryName, OutputMode.Complete(), shufflePartitions,
+        rocksdbState),
+      groupCols)
   }
 
   /** Streamed EWMA monitor — the [[cusumStreaming]] pattern verbatim: the
@@ -893,20 +888,10 @@ object EventStreams {
       groupCols: Seq[String], valCol: String,
       shufflePartitions: Option[Int] = None,
       rocksdbState: Boolean = false): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val stream = normalizeTs(spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir))
-    val daily = graft.ops.Behavior.dailyTotals(stream, groupCols, valCol)
-    withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = daily.writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    val drained = drainMemorySink(spark, queryName)
+    val daily = graft.ops.Behavior.dailyTotals(
+      normalizeTs(stagedStream(spark, stagedDir)), groupCols, valCol)
+    val drained = runToMemory(daily, queryName, OutputMode.Complete(),
+        shufflePartitions, rocksdbState)
       .select(groupCols.map(col) :+ col("d") :+
         col("x").cast("double").as("x"): _*)
     graft.ops.Profile.ewmaHalf(drained, groupCols, "d", "x")
@@ -928,22 +913,13 @@ object EventStreams {
       prep: DataFrame => DataFrame = identity,
       shufflePartitions: Option[Int] = None,
       rocksdbState: Boolean = false): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
-    val stream = prep(normalizeTs(spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)))
     val counts = graft.ops.Profile.ksSideCounts(
-      stream, groupCols, sideCol, valCol, sideA, sideB)
-    withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = counts.writeStream
-        .outputMode(OutputMode.Complete())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+      prep(normalizeTs(stagedStream(spark, stagedDir))),
+      groupCols, sideCol, valCol, sideA, sideB)
     graft.ops.Profile.ksFromCounts(
-      drainMemorySink(spark, queryName), groupCols)
+      runToMemory(counts, queryName, OutputMode.Complete(), shufflePartitions,
+        rocksdbState),
+      groupCols)
   }
 
   // NOTE: these must be public — Catalyst's generated (de)serializer code
@@ -1045,18 +1021,7 @@ object EventStreams {
       gapMinutes: Int = 30,
       shufflePartitions: Option[Int] = None,
       rocksdbState: Boolean = false): DataFrame = {
-    val schema = spark.read.parquet(eventsPath).schema
-    val stream = normalizeTs(
-      spark.readStream.schema(schema).parquet(stageStreamDir(eventsPath)))
-    withStatePartitions(spark, shufflePartitions, rocksdbState) {
-      val q = sessionizeStateful(stream, gapMinutes).writeStream
-        .outputMode(OutputMode.Append())
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    drainMemorySink(spark, queryName)
+    runToMemory(sessionizeStateful(eventStream(spark, eventsPath), gapMinutes),
+      queryName, OutputMode.Append(), shufflePartitions, rocksdbState)
   }
 }

@@ -30,7 +30,6 @@ object MaterializedAgg {
       shufflePartitions: Option[Int] = None,
       rocksdbState: Boolean = false,
       batchAdaptive: Option[Boolean] = None): DataFrame = {
-    val schema = spark.read.parquet(stagedDir).schema
     // written from the micro-batch thread, read from the caller thread after
     // awaitTermination — synchronized explicitly rather than relying on the
     // termination happens-before
@@ -40,8 +39,7 @@ object MaterializedAgg {
     // AND the localCheckpoint'ed state materialization (tasks per batch)
     EventStreams.withStatePartitions(spark, shufflePartitions, rocksdbState,
         batchAdaptive) {
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(stagedDir)
+      val q = EventStreams.stagedStream(spark, stagedDir)
         .writeStream
         .foreachBatch { (batch: Dataset[Row], _: Long) => stateLock.synchronized {
           val added = batch.toDF()

@@ -65,7 +65,8 @@ object QualityStreams {
       quarantineDir: Option[String] = None,
       checkpointDir: Option[String] = None,
       batchAdaptive: Option[Boolean] = None): GateResult = {
-    val schema = spark.read.parquet(stagedDir).schema
+    val stream = EventStreams.stagedStream(spark, stagedDir)
+    val schema = stream.schema
     def sink(prefix: String): String = {
       val d = Files.createTempDirectory(prefix)
       d.toFile.deleteOnExit()
@@ -88,8 +89,6 @@ object QualityStreams {
     val metricsLock = new Object
     val ruleCounts = scala.collection.mutable.Map.empty[String, Long]
     rules.foreach(r => ruleCounts(r.name) = 0L)
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(stagedDir)
     EventStreams.withStatePartitions(spark, shufflePartitions, rocksdbState,
         batchAdaptive) {
       val writer = stream.writeStream

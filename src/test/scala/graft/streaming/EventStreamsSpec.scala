@@ -149,6 +149,31 @@ class EventStreamsSpec extends AnyFunSuite with SparkSpec {
       s"expected the fail-fast IllegalStateException in ${chain(e).map(_.getClass.getSimpleName)}")
   }
 
+  test("a memory-sink face that fails mid-stream drops its sink view") {
+    // the fail-fast fixture above, driven through the face: b1 = {3,4},
+    // b2 = {1,2} regresses behind user 1's carried state. The query fails
+    // AFTER start() registered its memory-sink view, and that view (with
+    // every row the sink holds on the driver) must not outlive the failure
+    val dir = java.nio.file.Files.createTempDirectory("graft_trans_leak")
+    dir.toFile.deleteOnExit()
+    events.withColumn("slice", when($"event_id".isin(3, 4), 0L).otherwise(1L))
+      .where($"event_id".isin(1, 2, 3, 4))
+      .coalesce(1).write.parquet(s"$dir/src")
+    val staged = CorpusStreams.stageIdSlices(spark, s"$dir/src", "slice",
+      cuts = Seq(1L))
+    val name = s"trans_leak_${System.nanoTime()}"
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      EventStreams.transitionsStatefulStreaming(spark, staged, name)
+    }
+    def chain(t: Throwable): Seq[Throwable] =
+      Option(t).toSeq.flatMap(x => x +: chain(x.getCause))
+    assert(chain(e).exists(c => c.isInstanceOf[IllegalStateException] &&
+      c.getMessage.contains("BEFORE carried state")),
+      s"expected the fail-fast IllegalStateException in ${chain(e).map(_.getClass.getSimpleName)}")
+    assert(!spark.catalog.tableExists(name),
+      s"failed query leaked its memory sink view $name")
+  }
+
   test("rollingActiveStateful evicts closed windows yet matches batch in-order; negative horizon keeps all") {
     // Three batches for user 1: day 0 -> day 40 -> day 0 REPLAYED. With a
     // 3-day horizon the day-40 batch evicts every day-0 window from state
